@@ -36,24 +36,27 @@ object PipelineQueries {
     * per-directory deterministic). Rethrows the first failure. */
   private[graft] def inParallel(fs: (() => Unit)*): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.size)
+    val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
     try {
       val futs = fs.map { f =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
+        done.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = f()
         })
       }
       // surface the ORIGINAL exception (bench/verify print getMessage;
-      // an ExecutionException wrapper would blank it). On failure, STOP
-      // the sibling chains before unwinding: a plain shutdown() lets
-      // them keep running Spark jobs and writing their temp store dirs
-      // while the caller (bench/verify) is already deleting those dirs
-      // or timing the next query — failure-path races and timing
-      // contamination. Cancel-with-interrupt plus a bounded drain keeps
-      // the failure path quiet; chains are fixture-sized, so the drain
-      // bound is generous, and timing out only degrades to the old
-      // behavior (unwind with a straggler alive), logged by the await.
-      futs.foreach { fut =>
-        try fut.get()
+      // an ExecutionException wrapper would blank it). Chains are
+      // awaited in COMPLETION order, so the first failure is seen the
+      // moment it happens, not after every chain submitted before it
+      // finishes. On failure, STOP the sibling chains before unwinding:
+      // a plain shutdown() lets them keep running Spark jobs and
+      // writing their temp store dirs while the caller (bench/verify)
+      // is already deleting those dirs or timing the next query —
+      // failure-path races and timing contamination. Cancel-with-
+      // interrupt plus a bounded drain keeps the failure path quiet;
+      // chains are fixture-sized, so the drain bound is generous, and
+      // timing out only degrades to unwinding with a straggler alive.
+      futs.foreach { _ =>
+        try done.take().get()
         catch {
           case e: java.util.concurrent.ExecutionException =>
             futs.foreach(_.cancel(true))
@@ -64,6 +67,55 @@ object PipelineQueries {
       }
     } finally pool.shutdown()
   }
+
+  /** The store fixtures' shared first mutation batch over `docs`
+    * (`op, doc_id, text, old_text` rows): adds under ids shifted by
+    * 1e6, deletes, and updates of the ids ≡ 3 (mod 6) that append
+    * " shuffle data" and carry the superseded text in `old_text`. */
+  private def docBatch0(docs: DataFrame): DataFrame =
+    docs.where(col("doc_id") % 11 === 5)
+      .select(lit("add").as("op"),
+        (col("doc_id") + 1000000L).as("doc_id"), col("text"),
+        lit(null).cast("string").as("old_text"))
+      .unionByName(docs
+        .where(col("doc_id") % 7 === 0 && col("doc_id") % 6 =!= 3)
+        .select(lit("delete").as("op"), col("doc_id"), col("text"),
+          lit(null).cast("string").as("old_text")))
+      .unionByName(docs.where(col("doc_id") % 6 === 3)
+        .select(lit("update").as("op"), col("doc_id"),
+          concat(col("text"), lit(" shuffle data")).as("text"),
+          col("text").as("old_text")))
+
+  /** The BM25 store fixtures' second batch: deletes of the ids ≡ 3
+    * (mod 12) that [[docBatch0]] updated. */
+  private def docBatch1(docs: DataFrame): DataFrame =
+    docs.where(col("doc_id") % 6 === 3).where(col("doc_id") % 12 === 3)
+      .select(lit("delete").as("op"), col("doc_id"),
+        concat(col("text"), lit(" shuffle data")).as("text"),
+        lit(null).cast("string").as("old_text"))
+
+  /** [[docBatch0]]'s vector twin over `emb` (`op, vec_id, embedding`
+    * rows): adds, deletes, and updates of the ids ≡ 3 (mod 6) to
+    * their reversed vectors. */
+  private def vecBatch0(emb: DataFrame): DataFrame =
+    emb.where(col("vec_id") % 11 === 5)
+      .select(lit("add").as("op"),
+        (col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+      .unionByName(emb
+        .where(col("vec_id") % 9 === 7 && col("vec_id") % 6 =!= 3)
+        .select(lit("delete").as("op"), col("vec_id"),
+          col("embedding")))
+      .unionByName(emb.where(col("vec_id") % 6 === 3)
+        .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
+        .select(lit("update").as("op"), col("vec_id"), col("embedding")))
+
+  /** The superseded document versions of a [[docBatch0]]-shaped batch. */
+  private val oldText: DataFrame => DataFrame =
+    u => u.select(col("doc_id"), col("old_text").as("text"))
+
+  /** The vector stores' writer: one parquet partition per IVF cell. */
+  private def cellWrite(df: DataFrame, dst: String, mode: String): Unit =
+    df.write.partitionBy("cell").mode(mode).parquet(dst)
 
   /** 60 9×7-pixel image specs for the perceptual-dedup fixture; every 10th
     * is its predecessor's image with the (0,0) red channel nudged +5 — the
@@ -1083,20 +1135,7 @@ object PipelineQueries {
         .createTempDirectory("graft-reseed-vec").toString
       val newDir = java.nio.file.Files
         .createTempDirectory("graft-reseed-pq").toString
-      def cellWrite(df: org.apache.spark.sql.DataFrame, dst: String,
-                    mode: String): Unit =
-        df.write.partitionBy("cell").mode(mode).parquet(dst)
-      val vUpd1 = emb.where(col("vec_id") % 6 === 3)
-        .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
-      val v0 = emb.where(col("vec_id") % 11 === 5)
-        .select(lit("add").as("op"),
-          (col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-        .unionByName(emb
-          .where(col("vec_id") % 9 === 7 && col("vec_id") % 6 =!= 3)
-          .select(lit("delete").as("op"), col("vec_id"),
-            col("embedding")))
-        .unionByName(vUpd1.select(lit("update").as("op"), col("vec_id"),
-          col("embedding")))
+      val v0 = vecBatch0(emb)
       graft.streaming.IndexMaintenanceStream.bootstrap(
         s, vecDoor, vecDir, cellWrite, emb)
       graft.streaming.IndexMaintenanceStream.applyBatch(
@@ -1146,9 +1185,6 @@ object PipelineQueries {
         .createTempDirectory("graft-cut-pq").toString
       val servingDir = java.nio.file.Files
         .createTempDirectory("graft-cut-ptr").toString
-      def cellWrite(df: org.apache.spark.sql.DataFrame, dst: String,
-                    mode: String): Unit =
-        df.write.partitionBy("cell").mode(mode).parquet(dst)
       graft.streaming.IndexMaintenanceStream.bootstrap(
         s, vecDoor, vecDir, cellWrite, emb)
       graft.streaming.DocsStream.swapPointer(s, servingDir, vecDir)
@@ -3023,31 +3059,13 @@ object PipelineQueries {
         .createTempDirectory("graft-tailer").toString
       graft.streaming.IndexMaintenanceStream.bootstrap(
         s, door, dir, pipeline.Bm25Index.write, docs)
-      val oldV: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame =
-        u => u.select(col("doc_id"), col("old_text").as("text"))
-      val upd1old = docs.where(col("doc_id") % 6 === 3)
-      val b0 = docs.where(col("doc_id") % 11 === 5)
-        .select(lit("add").as("op"),
-          (col("doc_id") + 1000000L).as("doc_id"), col("text"),
-          lit(null).cast("string").as("old_text"))
-        .unionByName(docs
-          .where(col("doc_id") % 7 === 0 && col("doc_id") % 6 =!= 3)
-          .select(lit("delete").as("op"), col("doc_id"), col("text"),
-            lit(null).cast("string").as("old_text")))
-        .unionByName(upd1old.select(lit("update").as("op"),
-          col("doc_id"),
-          concat(col("text"), lit(" shuffle data")).as("text"),
-          col("text").as("old_text")))
+      val b0 = docBatch0(docs)
       graft.streaming.IndexMaintenanceStream.applyBatch(
-        s, door, dir, pipeline.Bm25Index.write, b0, 0L, Some(oldV),
+        s, door, dir, pipeline.Bm25Index.write, b0, 0L, Some(oldText),
             knownDeltaEmpty = Some(false))
-      val b1 = upd1old.where(col("doc_id") % 12 === 3)
-        .select(lit("delete").as("op"), col("doc_id"),
-          concat(col("text"), lit(" shuffle data")).as("text"),
-          lit(null).cast("string").as("old_text"))
+      val b1 = docBatch1(docs)
       graft.streaming.IndexMaintenanceStream.applyBatch(
-        s, door, dir, pipeline.Bm25Index.write, b1, 1L, Some(oldV),
+        s, door, dir, pipeline.Bm25Index.write, b1, 1L, Some(oldText),
             knownDeltaEmpty = Some(true))
       val (live, stats) = graft.streaming.IndexMaintenanceStream
         .currentView(s, door, dir)
@@ -3283,7 +3301,7 @@ object PipelineQueries {
     }),
 
     // BATCHED STORE-BACKED hybrid ([[pipeline.Retrieval
-    // .hybridFromStoresBatch]]): both tailer-maintained stores run
+    // .hybridFromStores]] on Batch queries): both tailer-maintained stores run
     // their two lifecycle mutation batches through the versioned
     // parquet layout, then five queries are answered in ONE pass over
     // each store at one consistent asOf (min committed batch) — the
@@ -3297,46 +3315,17 @@ object PipelineQueries {
       val bmDoor = new pipeline.Maintenance.Bm25Door(col("text"), 64)
       val bmDir = java.nio.file.Files
         .createTempDirectory("graft-hsb-bm").toString
-      val oldV: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame =
-        u => u.select(col("doc_id"), col("old_text").as("text"))
-      val upd1old = docs.where(col("doc_id") % 6 === 3)
-      val b0 = docs.where(col("doc_id") % 11 === 5)
-        .select(lit("add").as("op"),
-          (col("doc_id") + 1000000L).as("doc_id"), col("text"),
-          lit(null).cast("string").as("old_text"))
-        .unionByName(docs
-          .where(col("doc_id") % 7 === 0 && col("doc_id") % 6 =!= 3)
-          .select(lit("delete").as("op"), col("doc_id"), col("text"),
-            lit(null).cast("string").as("old_text")))
-        .unionByName(upd1old.select(lit("update").as("op"),
-          col("doc_id"),
-          concat(col("text"), lit(" shuffle data")).as("text"),
-          col("text").as("old_text")))
-      val b1 = upd1old.where(col("doc_id") % 12 === 3)
-        .select(lit("delete").as("op"), col("doc_id"),
-          concat(col("text"), lit(" shuffle data")).as("text"),
-          lit(null).cast("string").as("old_text"))
+      val b0 = docBatch0(docs)
+      val b1 = docBatch1(docs)
       // ---- IVF store: the ann_ivf_lifecycle mutation batches
       val cents = pipeline.Similarity.centroids(emb, 16)
       val ivfDoor = new pipeline.Maintenance.IvfDoor(cents)
       val ivfDir = java.nio.file.Files
         .createTempDirectory("graft-hsb-ivf").toString
-      def ivfWrite(df: org.apache.spark.sql.DataFrame, dst: String,
-                   mode: String): Unit =
-        df.write.partitionBy("cell").mode(mode).parquet(dst)
-      val vUpd1 = emb.where(col("vec_id") % 6 === 3)
+      val v0 = vecBatch0(emb)
+      val v1 = emb.where(col("vec_id") % 6 === 3)
         .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
-      val v0 = emb.where(col("vec_id") % 11 === 5)
-        .select(lit("add").as("op"),
-          (col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-        .unionByName(emb
-          .where(col("vec_id") % 9 === 7 && col("vec_id") % 6 =!= 3)
-          .select(lit("delete").as("op"), col("vec_id"),
-            col("embedding")))
-        .unionByName(vUpd1.select(lit("update").as("op"), col("vec_id"),
-          col("embedding")))
-      val v1 = vUpd1.where(col("vec_id") % 12 === 3)
+        .where(col("vec_id") % 12 === 3)
         .select(lit("delete").as("op"), col("vec_id"), col("embedding"))
       // two independent store dirs: the chains overlap (§2.6); each
       // chain keeps its own batch order (bootstrap → b0 → b1)
@@ -3345,29 +3334,29 @@ object PipelineQueries {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, bmDoor, bmDir, pipeline.Bm25Index.write, docs)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV),
+            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldText),
             knownDeltaEmpty = Some(false))
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, bmDoor, bmDir, pipeline.Bm25Index.write, b1, 1L, Some(oldV),
+            s, bmDoor, bmDir, pipeline.Bm25Index.write, b1, 1L, Some(oldText),
             knownDeltaEmpty = Some(true))
         },
         () => {
           graft.streaming.IndexMaintenanceStream.bootstrap(
-            s, ivfDoor, ivfDir, ivfWrite, emb)
+            s, ivfDoor, ivfDir, cellWrite, emb)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, ivfDoor, ivfDir, ivfWrite, v0, 0L,
+            s, ivfDoor, ivfDir, cellWrite, v0, 0L,
             knownDeltaEmpty = Some(false))
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, ivfDoor, ivfDir, ivfWrite, v1, 1L,
+            s, ivfDoor, ivfDir, cellWrite, v1, 1L,
             knownDeltaEmpty = Some(true))
         })
       // ---- one consistent batched fusion; eager-checkpoint the tiny
       // result so both temp stores can be dropped before the caller's
       // action runs (the tailer-fixture discipline)
       val result = pipeline.Dedup.checkpointCorpus(
-        pipeline.Retrieval.hybridFromStoresBatch(
-          s, bmDoor, bmDir, 64, ivfDoor, ivfDir, cents,
-          emb.where(col("vec_id") < 5), hybridBatchTerms,
+        pipeline.Retrieval.hybridFromStores(s, bmDoor -> bmDir,
+          ivfDoor -> ivfDir, pipeline.Retrieval.Batch(
+            emb.where(col("vec_id") < 5), hybridBatchTerms),
           k = 10, legK = 20, nprobe = 4)
           .orderBy("qid", "rank"))
       org.apache.commons.io.FileUtils.deleteQuietly(
@@ -3378,7 +3367,7 @@ object PipelineQueries {
     }),
 
     // HYBRID SERVING FROM THE CODE-STORE TIER ([[pipeline.Retrieval
-    // .hybridFromStoresPq]]): the memory-bounded deployment triple —
+    // .hybridFromStores]] over the PQ door): the memory-bounded deployment triple —
     // BM25 postings, the PQ-code store (8+m bytes/vector ADC working
     // set), and the full-vector store that funds the exact-rerank tail
     // — all bootstrapped through the versioned layout, mutated by one
@@ -3397,22 +3386,7 @@ object PipelineQueries {
       val bmDoor = new pipeline.Maintenance.Bm25Door(col("text"), 64)
       val bmDir = java.nio.file.Files
         .createTempDirectory("graft-hpq-bm").toString
-      val oldV: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame =
-        u => u.select(col("doc_id"), col("old_text").as("text"))
-      val upd1old = docs.where(col("doc_id") % 6 === 3)
-      val b0 = docs.where(col("doc_id") % 11 === 5)
-        .select(lit("add").as("op"),
-          (col("doc_id") + 1000000L).as("doc_id"), col("text"),
-          lit(null).cast("string").as("old_text"))
-        .unionByName(docs
-          .where(col("doc_id") % 7 === 0 && col("doc_id") % 6 =!= 3)
-          .select(lit("delete").as("op"), col("doc_id"), col("text"),
-            lit(null).cast("string").as("old_text")))
-        .unionByName(upd1old.select(lit("update").as("op"),
-          col("doc_id"),
-          concat(col("text"), lit(" shuffle data")).as("text"),
-          col("text").as("old_text")))
+      val b0 = docBatch0(docs)
       // ---- PQ-code store + full-vector store: the same vector batch
       val cents = pipeline.Similarity.centroids(emb, 16)
       // same first-16-by-id seed prefix centroids already collected —
@@ -3425,20 +3399,7 @@ object PipelineQueries {
         .createTempDirectory("graft-hpq-pq").toString
       val vecDir = java.nio.file.Files
         .createTempDirectory("graft-hpq-vec").toString
-      def cellWrite(df: org.apache.spark.sql.DataFrame, dst: String,
-                    mode: String): Unit =
-        df.write.partitionBy("cell").mode(mode).parquet(dst)
-      val vUpd1 = emb.where(col("vec_id") % 6 === 3)
-        .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
-      val v0 = emb.where(col("vec_id") % 11 === 5)
-        .select(lit("add").as("op"),
-          (col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-        .unionByName(emb
-          .where(col("vec_id") % 9 === 7 && col("vec_id") % 6 =!= 3)
-          .select(lit("delete").as("op"), col("vec_id"),
-            col("embedding")))
-        .unionByName(vUpd1.select(lit("update").as("op"), col("vec_id"),
-          col("embedding")))
+      val v0 = vecBatch0(emb)
       // the three stores are INDEPENDENT directories; each chain stays
       // internally ordered (bootstrap → batch), the chains overlap
       inParallel(
@@ -3446,7 +3407,7 @@ object PipelineQueries {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, bmDoor, bmDir, pipeline.Bm25Index.write, docs)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV),
+            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldText),
             knownDeltaEmpty = Some(false))
         },
         () => {
@@ -3465,11 +3426,12 @@ object PipelineQueries {
         })
       // ---- one consistent code-tier serving read
       val result = pipeline.Dedup.checkpointCorpus(
-        pipeline.Retrieval.hybridFromStoresPq(
-          s, bmDoor, bmDir, 64, pqDoor, pqDir, cents, cbs,
-          vecDoor, vecDir, emb.where(col("vec_id") === 0L),
-          Seq("data", "stream", "shuffle"),
-          k = 10, legK = 20, rerankC = 40, nprobe = 4))
+        pipeline.Retrieval.hybridFromStores(s, bmDoor -> bmDir,
+          pqDoor -> pqDir, pipeline.Retrieval.Frame(
+            emb.where(col("vec_id") === 0L),
+            Seq("data", "stream", "shuffle")),
+          k = 10, legK = 20, nprobe = 4,
+          rerank = Some(pipeline.Retrieval.Fixed(40) -> (vecDoor -> vecDir))))
       Seq(bmDir, pqDir, vecDir).foreach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(
           new java.io.File(p)))
@@ -3477,7 +3439,7 @@ object PipelineQueries {
     }),
 
     // HYBRID SERVING FROM THE SQ8 TIER ([[pipeline.Retrieval
-    // .hybridFromStoresSq8]]): the quantized middle tier serving the
+    // .hybridFromStores]] over the SQ8 door): the quantized middle tier serving the
     // fused ranker — BM25 postings + the int8 store (both mutated by
     // one mixed batch through the versioned layout) at one
     // min-committed batch; the vector leg is the int8-cosine pruned
@@ -3491,47 +3453,19 @@ object PipelineQueries {
       val bmDoor = new pipeline.Maintenance.Bm25Door(col("text"), 64)
       val bmDir = java.nio.file.Files
         .createTempDirectory("graft-hsq-bm").toString
-      val oldV: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame =
-        u => u.select(col("doc_id"), col("old_text").as("text"))
-      val upd1old = docs.where(col("doc_id") % 6 === 3)
-      val b0 = docs.where(col("doc_id") % 11 === 5)
-        .select(lit("add").as("op"),
-          (col("doc_id") + 1000000L).as("doc_id"), col("text"),
-          lit(null).cast("string").as("old_text"))
-        .unionByName(docs
-          .where(col("doc_id") % 7 === 0 && col("doc_id") % 6 =!= 3)
-          .select(lit("delete").as("op"), col("doc_id"), col("text"),
-            lit(null).cast("string").as("old_text")))
-        .unionByName(upd1old.select(lit("update").as("op"),
-          col("doc_id"),
-          concat(col("text"), lit(" shuffle data")).as("text"),
-          col("text").as("old_text")))
+      val b0 = docBatch0(docs)
       val cents = pipeline.Similarity.centroids(emb, 16)
       val sq8Door = new pipeline.Maintenance.IvfSq8Door(cents)
       val sq8Dir = java.nio.file.Files
         .createTempDirectory("graft-hsq-sq8").toString
-      def cellWrite(df: org.apache.spark.sql.DataFrame, dst: String,
-                    mode: String): Unit =
-        df.write.partitionBy("cell").mode(mode).parquet(dst)
-      val vUpd1 = emb.where(col("vec_id") % 6 === 3)
-        .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
-      val v0 = emb.where(col("vec_id") % 11 === 5)
-        .select(lit("add").as("op"),
-          (col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-        .unionByName(emb
-          .where(col("vec_id") % 9 === 7 && col("vec_id") % 6 =!= 3)
-          .select(lit("delete").as("op"), col("vec_id"),
-            col("embedding")))
-        .unionByName(vUpd1.select(lit("update").as("op"), col("vec_id"),
-          col("embedding")))
+      val v0 = vecBatch0(emb)
       // independent store dirs: the two chains overlap (§2.6)
       inParallel(
         () => {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, bmDoor, bmDir, pipeline.Bm25Index.write, docs)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV),
+            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldText),
             knownDeltaEmpty = Some(false))
         },
         () => {
@@ -3542,10 +3476,10 @@ object PipelineQueries {
             knownDeltaEmpty = Some(false))
         })
       val result = pipeline.Dedup.checkpointCorpus(
-        pipeline.Retrieval.hybridFromStoresSq8(
-          s, bmDoor, bmDir, 64, sq8Door, sq8Dir, cents,
-          emb.where(col("vec_id") === 0L),
-          Seq("data", "stream", "shuffle"),
+        pipeline.Retrieval.hybridFromStores(s, bmDoor -> bmDir,
+          sq8Door -> sq8Dir, pipeline.Retrieval.Frame(
+            emb.where(col("vec_id") === 0L),
+            Seq("data", "stream", "shuffle")),
           k = 10, legK = 20, nprobe = 4))
       Seq(bmDir, sq8Dir).foreach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(
@@ -3554,7 +3488,7 @@ object PipelineQueries {
     }),
 
     // the ADAPTIVE-TIER hybrid ([[pipeline.Retrieval
-    // .hybridFromStoresSq8Adaptive]]): the margin router serving the
+    // .hybridFromStores]] with a Margin rerank): the margin router serving the
     // fused ranker from THREE mutated stores (BM25 + SQ8 codes + full
     // vectors) at one min-committed batch — the vector leg int8-ranks
     // 40 candidates and routes through the exact full-vector tail
@@ -3568,22 +3502,7 @@ object PipelineQueries {
       val bmDoor = new pipeline.Maintenance.Bm25Door(col("text"), 64)
       val bmDir = java.nio.file.Files
         .createTempDirectory("graft-hsa-bm").toString
-      val oldV: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame =
-        u => u.select(col("doc_id"), col("old_text").as("text"))
-      val upd1old = docs.where(col("doc_id") % 6 === 3)
-      val b0 = docs.where(col("doc_id") % 11 === 5)
-        .select(lit("add").as("op"),
-          (col("doc_id") + 1000000L).as("doc_id"), col("text"),
-          lit(null).cast("string").as("old_text"))
-        .unionByName(docs
-          .where(col("doc_id") % 7 === 0 && col("doc_id") % 6 =!= 3)
-          .select(lit("delete").as("op"), col("doc_id"), col("text"),
-            lit(null).cast("string").as("old_text")))
-        .unionByName(upd1old.select(lit("update").as("op"),
-          col("doc_id"),
-          concat(col("text"), lit(" shuffle data")).as("text"),
-          col("text").as("old_text")))
+      val b0 = docBatch0(docs)
       val cents = pipeline.Similarity.centroids(emb, 16)
       val sq8Door = new pipeline.Maintenance.IvfSq8Door(cents)
       val vecDoor = new pipeline.Maintenance.IvfDoor(cents)
@@ -3591,27 +3510,14 @@ object PipelineQueries {
         .createTempDirectory("graft-hsa-sq8").toString
       val vecDir = java.nio.file.Files
         .createTempDirectory("graft-hsa-vec").toString
-      def cellWrite(df: org.apache.spark.sql.DataFrame, dst: String,
-                    mode: String): Unit =
-        df.write.partitionBy("cell").mode(mode).parquet(dst)
-      val vUpd1 = emb.where(col("vec_id") % 6 === 3)
-        .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
-      val v0 = emb.where(col("vec_id") % 11 === 5)
-        .select(lit("add").as("op"),
-          (col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-        .unionByName(emb
-          .where(col("vec_id") % 9 === 7 && col("vec_id") % 6 =!= 3)
-          .select(lit("delete").as("op"), col("vec_id"),
-            col("embedding")))
-        .unionByName(vUpd1.select(lit("update").as("op"), col("vec_id"),
-          col("embedding")))
+      val v0 = vecBatch0(emb)
       // three independent store dirs: the chains overlap (§2.6)
       inParallel(
         () => {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, bmDoor, bmDir, pipeline.Bm25Index.write, docs)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV),
+            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldText),
             knownDeltaEmpty = Some(false))
         },
         () => {
@@ -3629,12 +3535,13 @@ object PipelineQueries {
             knownDeltaEmpty = Some(false))
         })
       val result = pipeline.Dedup.checkpointCorpus(
-        pipeline.Retrieval.hybridFromStoresSq8Adaptive(
-          s, bmDoor, bmDir, 64, sq8Door, sq8Dir, cents,
-          vecDoor, vecDir, emb.where(col("vec_id") === 0L),
-          Seq("data", "stream", "shuffle"),
-          k = 10, legK = 20, nprobe = 4, rerankC = 40,
-          marginPpm = 3000L))
+        pipeline.Retrieval.hybridFromStores(s, bmDoor -> bmDir,
+          sq8Door -> sq8Dir, pipeline.Retrieval.Frame(
+            emb.where(col("vec_id") === 0L),
+            Seq("data", "stream", "shuffle")),
+          k = 10, legK = 20, nprobe = 4,
+          rerank = Some(
+            pipeline.Retrieval.Margin(3000L, 40) -> (vecDoor -> vecDir))))
       Seq(bmDir, sq8Dir, vecDir).foreach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(
           new java.io.File(p)))
@@ -3642,7 +3549,7 @@ object PipelineQueries {
     }),
 
     // the code-tier hybrid BATCHED and FILTERED together ([[pipeline
-    // .Retrieval.hybridFromStoresPqBatch]] with `allowed`): five
+    // .Retrieval.hybridFromStores]], PQ door, `allowed`): five
     // queries in one pass over the three mutated stores, the slice
     // mask (base ids ≡ 0 mod 3) applied to the lexical pool, the ADC
     // candidates, AND therefore the rerank tail — global scoring
@@ -3657,22 +3564,7 @@ object PipelineQueries {
       val bmDoor = new pipeline.Maintenance.Bm25Door(col("text"), 64)
       val bmDir = java.nio.file.Files
         .createTempDirectory("graft-hpqf-bm").toString
-      val oldV: org.apache.spark.sql.DataFrame =>
-          org.apache.spark.sql.DataFrame =
-        u => u.select(col("doc_id"), col("old_text").as("text"))
-      val upd1old = docs.where(col("doc_id") % 6 === 3)
-      val b0 = docs.where(col("doc_id") % 11 === 5)
-        .select(lit("add").as("op"),
-          (col("doc_id") + 1000000L).as("doc_id"), col("text"),
-          lit(null).cast("string").as("old_text"))
-        .unionByName(docs
-          .where(col("doc_id") % 7 === 0 && col("doc_id") % 6 =!= 3)
-          .select(lit("delete").as("op"), col("doc_id"), col("text"),
-            lit(null).cast("string").as("old_text")))
-        .unionByName(upd1old.select(lit("update").as("op"),
-          col("doc_id"),
-          concat(col("text"), lit(" shuffle data")).as("text"),
-          col("text").as("old_text")))
+      val b0 = docBatch0(docs)
       val cents = pipeline.Similarity.centroids(emb, 16)
       // same first-16-by-id seed prefix centroids already collected —
       // derive the codebooks driver-side, no second collect job
@@ -3684,27 +3576,14 @@ object PipelineQueries {
         .createTempDirectory("graft-hpqf-pq").toString
       val vecDir = java.nio.file.Files
         .createTempDirectory("graft-hpqf-vec").toString
-      def cellWrite(df: org.apache.spark.sql.DataFrame, dst: String,
-                    mode: String): Unit =
-        df.write.partitionBy("cell").mode(mode).parquet(dst)
-      val vUpd1 = emb.where(col("vec_id") % 6 === 3)
-        .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
-      val v0 = emb.where(col("vec_id") % 11 === 5)
-        .select(lit("add").as("op"),
-          (col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-        .unionByName(emb
-          .where(col("vec_id") % 9 === 7 && col("vec_id") % 6 =!= 3)
-          .select(lit("delete").as("op"), col("vec_id"),
-            col("embedding")))
-        .unionByName(vUpd1.select(lit("update").as("op"), col("vec_id"),
-          col("embedding")))
+      val v0 = vecBatch0(emb)
       // three independent store dirs: the chains overlap (§2.6)
       inParallel(
         () => {
           graft.streaming.IndexMaintenanceStream.bootstrap(
             s, bmDoor, bmDir, pipeline.Bm25Index.write, docs)
           graft.streaming.IndexMaintenanceStream.applyBatch(
-            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldV),
+            s, bmDoor, bmDir, pipeline.Bm25Index.write, b0, 0L, Some(oldText),
             knownDeltaEmpty = Some(false))
         },
         () => {
@@ -3722,13 +3601,13 @@ object PipelineQueries {
             knownDeltaEmpty = Some(false))
         })
       val result = pipeline.Dedup.checkpointCorpus(
-        pipeline.Retrieval.hybridFromStoresPqBatch(
-          s, bmDoor, bmDir, 64, pqDoor, pqDir, cents, cbs,
-          vecDoor, vecDir, emb.where(col("vec_id") < 5),
-          hybridBatchTerms, k = 10, legK = 20, rerankC = 40,
-          nprobe = 4,
+        pipeline.Retrieval.hybridFromStores(s, bmDoor -> bmDir,
+          pqDoor -> pqDir, pipeline.Retrieval.Batch(
+            emb.where(col("vec_id") < 5), hybridBatchTerms),
+          k = 10, legK = 20, nprobe = 4,
           allowed = Some(docs.where(col("doc_id") % 3 === 0)
-            .select("doc_id")))
+            .select("doc_id")),
+          rerank = Some(pipeline.Retrieval.Fixed(40) -> (vecDoor -> vecDir)))
           .orderBy("qid", "rank"))
       Seq(bmDir, pqDir, vecDir).foreach(p =>
         org.apache.commons.io.FileUtils.deleteQuietly(

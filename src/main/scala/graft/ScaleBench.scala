@@ -1786,8 +1786,9 @@ object ScaleBench {
     }
 
     // ---- BATCHED STORE-BACKED hybrid at 1M (Retrieval
-    // .hybridFromStoresBatch): the round-14 batch amortization and the
-    // round-14 min-committed-batch store consistency COMPOSED — both
+    // .hybridFromStores on Batch queries): the round-14 batch
+    // amortization and the round-14 min-committed-batch store
+    // consistency COMPOSED — both
     // gen stores carry a mixed mutation batch (1,000 tombstoned
     // deletes + 1,000 gen updates + 1,000 adds each), so the probes
     // run through tombstone anti-joins over base+delta layouts, and 16
@@ -1812,16 +1813,14 @@ object ScaleBench {
       def ivfWrite(df: org.apache.spark.sql.DataFrame, d: String,
                    mode: String): Unit =
         df.write.partitionBy("cell").mode(mode).parquet(d)
-      var cents: Seq[(Long, Array[Double])] = Nil
       var bmDoor: pipeline.Maintenance.Bm25Door = null
       var ivfDoor: pipeline.Maintenance.IvfDoor = null
       t("hybrid_store_bootstrap_1m") {
         bmDoor = new pipeline.Maintenance.Bm25Door(col("text"), 256)
         streaming.IndexMaintenanceStream.bootstrap(spark, bmDoor, bmDir,
           pipeline.Bm25Index.write, gdocs(spark.range(n).toDF()))
-        cents = pipeline.Similarity.centroids(
-          gvecs(spark.range(n).toDF()), 256)
-        ivfDoor = new pipeline.Maintenance.IvfDoor(cents)
+        ivfDoor = new pipeline.Maintenance.IvfDoor(
+          pipeline.Similarity.centroids(gvecs(spark.range(n).toDF()), 256))
         streaming.IndexMaintenanceStream.bootstrap(spark, ivfDoor,
           ivfDir, ivfWrite, gvecs(spark.range(n).toDF()))
         // one mixed batch per store: the serving views must be
@@ -1868,8 +1867,9 @@ object ScaleBench {
       pin()
       var batched: Map[(Long, Long), Long] = Map.empty
       ti("hybrid_store_batch_batched_1m") {
-        val rows = pipeline.Retrieval.hybridFromStoresBatch(spark,
-          bmDoor, bmDir, 256, ivfDoor, ivfDir, cents, qvecs, qbatch,
+        val rows = pipeline.Retrieval.hybridFromStores(spark,
+          bmDoor -> bmDir, ivfDoor -> ivfDir,
+          pipeline.Retrieval.Batch(qvecs, qbatch),
           k = 10, legK = 20, nprobe = 8).collect()
         batched = rows.map(r =>
           (r.getLong(0), r.getLong(4)) -> r.getLong(1)).toMap
@@ -1879,8 +1879,8 @@ object ScaleBench {
         var total = 0
         for ((qid, ts) <- qbatch) {
           val alone = pipeline.Retrieval.hybridFromStores(spark,
-            bmDoor, bmDir, 256, ivfDoor, ivfDir, cents,
-            qvecs.where(col("vec_id") === qid), ts,
+            bmDoor -> bmDir, ivfDoor -> ivfDir, pipeline.Retrieval.Frame(
+              qvecs.where(col("vec_id") === qid), ts),
             k = 10, legK = 20, nprobe = 8).collect()
           total += alone.length
           // batched ≡ alone, spot-checked on every query's top row; a

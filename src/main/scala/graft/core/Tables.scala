@@ -39,12 +39,15 @@ object Tables {
       String, org.apache.spark.sql.types.StructType]()
   private val SchemaCacheMax = 4096
 
-  /** Drop cached schemas — all of them, or only entries under `dir`
-    * (the regeneration hook for test/dev harnesses that rewrite a
-    * fixture directory in-JVM). */
+  /** Drop cached schemas — all of them, or only entries under the
+    * directory `dir` (the regeneration hook for test/dev harnesses that
+    * rewrite a fixture directory in-JVM). Matches whole path segments:
+    * `/x/foo` never drops `/x/foobar`'s entries. */
   def invalidateSchemaCache(dir: Option[String] = None): Unit = dir match {
     case None => schemaCache.clear()
-    case Some(d) => schemaCache.keySet.removeIf(_.startsWith(d)); ()
+    case Some(d) =>
+      val under = d.stripSuffix("/") + "/"
+      schemaCache.keySet.removeIf(_.startsWith(under)); ()
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {

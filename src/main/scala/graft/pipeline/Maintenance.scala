@@ -158,6 +158,13 @@ object Maintenance {
       "a Quantizer's codebooks must be None (no PQ tables) or non-empty" +
         " — Some(empty) is a malformed table, not a PQ-free door")
     lazy val contentHash: String = Quantizer.hashOf(this)
+    /** Whether `cents`/`cbs` are these tables: the same objects, or
+      * equal content hashes (a driver-side digest, no Spark job). */
+    def sameTables(cents: Seq[(Long, Array[Double])],
+                   cbs: Option[Array[Array[Array[Double]]]]): Boolean =
+      (this.cents.eq(cents) && codebooks.size == cbs.size &&
+        codebooks.zip(cbs).forall { case (a, b) => a.eq(b) }) ||
+        contentHash == Quantizer(cents, cbs).contentHash
   }
 
   object Quantizer {
@@ -304,7 +311,7 @@ object Maintenance {
     def quantizer: Option[Quantizer] = None
   }
 
-  final class Bm25Door(text: Column, nBuckets: Int) extends Door {
+  final class Bm25Door(text: Column, val nBuckets: Int) extends Door {
     val idName = "doc_id"
     val batchId: Column = col("doc_id")
     def index(batch: DataFrame): DataFrame =
@@ -329,19 +336,63 @@ object Maintenance {
     }
   }
 
-  final class IvfDoor(cents: Seq[(Long, Array[Double])]) extends Door {
+  /** A door over `(cell, nid, …)` rows keyed by a FROZEN [[Quantizer]]:
+    * the gen machinery (`nid`/`gen` keys, tombstones, retirement) is
+    * the same for every vector family — only the row encoding and the
+    * serving probe differ. [[probe]] answers the vector leg of a
+    * store-backed hybrid ([[Retrieval.hybridFromStores]]) over this
+    * door's view under the door's own frozen tables, so a caller can
+    * never probe a store under tables it was not written with. Output:
+    * the probe's `(qid, nid, rank)` rows. A (queries × rerank) shape
+    * the family has no probe for fails loudly. */
+  abstract class VectorDoor(frozen: Quantizer) extends Door {
     val idName = "nid"
     val batchId: Column = col("vec_id")
-    def index(batch: DataFrame): DataFrame =
-      Similarity.ivfAssign(batch, cents)
     def stamp(rows: DataFrame, gen: Long): DataFrame =
       Similarity.ivfStampGen(rows, gen)
     def tombstones(ids: DataFrame, uptoGen: Long): DataFrame =
       Similarity.ivfGenTombstones(ids, col(idName), uptoGen)
     def applyTombstones(rows: DataFrame, tombs: DataFrame): DataFrame =
       Similarity.ivfApplyGenTombstones(rows, tombs)
-    override val quantizer: Option[Quantizer] =
-      Some(Quantizer(cents, None))
+    override val quantizer: Option[Quantizer] = Some(frozen)
+
+    /** `allowed` (first column = allowed ids) masks candidates before
+      * the rank window; `rerank` carries the exact tail's policy and
+      * its `(cell, nid, ne)` full-vector side table. */
+    def probe(q: Retrieval.Queries, view: DataFrame, legK: Int,
+              nprobe: Int, allowed: Option[DataFrame],
+              rerank: Option[(Retrieval.Rerank, DataFrame)]): DataFrame =
+      throw new IllegalArgumentException(
+        s"${getClass.getSimpleName} has no probe for " +
+          s"${q.getClass.getSimpleName} queries with rerank " +
+          rerank.fold("none")(_._1.toString))
+  }
+
+  /** The fixed-size exact tail of a rerank option, in the
+    * `(rerankC, vectors)` form the `Similarity` probes take. */
+  private def fixedTail(rerank: Option[(Retrieval.Rerank, DataFrame)])
+      : Option[(Int, DataFrame)] =
+    rerank.collect { case (Retrieval.Fixed(c), v) => (c, v) }
+
+  /** The full-vector door: `(cell, nid, ne)` rows under frozen coarse
+    * centroids, served by the partition-pruned cosine probe. */
+  final class IvfDoor(cents: Seq[(Long, Array[Double])])
+      extends VectorDoor(Quantizer(cents, None)) {
+    def index(batch: DataFrame): DataFrame =
+      Similarity.ivfAssign(batch, cents)
+    override def probe(q: Retrieval.Queries, view: DataFrame, legK: Int,
+                       nprobe: Int, allowed: Option[DataFrame],
+                       rerank: Option[(Retrieval.Rerank, DataFrame)])
+        : DataFrame = (q, rerank) match {
+      case (Retrieval.Scalar(qid, v, _), None) =>
+        Similarity.ivfTopKIndexedScalar(qid, v, view, cents, legK, nprobe,
+          allowed)
+      case (Retrieval.Vecs(v), None) => allowed.fold(
+        Similarity.ivfTopKIndexedPruned(v, view, cents, legK, nprobe))(a =>
+        Similarity.ivfTopKIndexedPrunedFiltered(v, view, cents, legK,
+          nprobe, a))
+      case _ => super.probe(q, view, legK, nprobe, allowed, rerank)
+    }
   }
 
   /** The PQ-CODE serving door — the memory-bounded billion-vector
@@ -353,43 +404,56 @@ object Maintenance {
     * [[IvfDoor]]'s (same `nid`/`gen` keys — the code column changes
     * nothing about retirement). Re-seeding either quantizer after
     * drift is the scheduled-rebuild path, exactly like the IVF door.
-    * Serve through [[Similarity.ivfPqTopKIndexedPruned]]. */
+    * Serves ADC ranking with the `Fixed` exact-rerank tail funded by a
+    * full-vector store ([[Similarity.ivfPqTopKIndexedPrunedRerank]]). */
   final class IvfPqDoor(cents: Seq[(Long, Array[Double])],
-                        cbs: Array[Array[Array[Double]]]) extends Door {
-    val idName = "nid"
-    val batchId: Column = col("vec_id")
+                        cbs: Array[Array[Array[Double]]])
+      extends VectorDoor(Quantizer(cents, Some(cbs))) {
     def index(batch: DataFrame): DataFrame =
       Similarity.ivfPqAssign(batch, cents, cbs)
-    def stamp(rows: DataFrame, gen: Long): DataFrame =
-      Similarity.ivfStampGen(rows, gen)
-    def tombstones(ids: DataFrame, uptoGen: Long): DataFrame =
-      Similarity.ivfGenTombstones(ids, col(idName), uptoGen)
-    def applyTombstones(rows: DataFrame, tombs: DataFrame): DataFrame =
-      Similarity.ivfApplyGenTombstones(rows, tombs)
-    override val quantizer: Option[Quantizer] =
-      Some(Quantizer(cents, Some(cbs)))
+    override def probe(q: Retrieval.Queries, view: DataFrame, legK: Int,
+                       nprobe: Int, allowed: Option[DataFrame],
+                       rerank: Option[(Retrieval.Rerank, DataFrame)])
+        : DataFrame = (q, rerank) match {
+      case (Retrieval.Scalar(qid, v, _), Some((_: Retrieval.Fixed, _))) =>
+        Similarity.ivfPqTopKIndexedScalar(qid, v, view, cents, cbs, legK,
+          nprobe, rerank = fixedTail(rerank), allowed = allowed)
+      case (Retrieval.Vecs(v), Some((Retrieval.Fixed(c), vectors))) =>
+        Similarity.ivfPqTopKIndexedPrunedRerank(v, view, cents, cbs, legK,
+          nprobe, c, vectors, allowed)
+      case _ => super.probe(q, view, legK, nprobe, allowed, rerank)
+    }
   }
 
   /** The SQ8 (int8 scalar-quantized) serving door — the middle tier of
     * the bytes-vs-recall spectrum ([[Similarity.sq8Assign]]'s
     * `(cell, nid, qv, scale_x1e9)` rows: d bytes/vector, near-full
-    * recall, no rerank tail needed). Coarse quantizer FROZEN like
-    * every vector door; a delta batch is one shuffle-free
-    * quantize+assign projection; gen machinery identical. Serve
-    * through [[Similarity.sq8TopKIndexedPruned]]. */
-  final class IvfSq8Door(cents: Seq[(Long, Array[Double])]) extends Door {
-    val idName = "nid"
-    val batchId: Column = col("vec_id")
+    * recall). Coarse quantizer FROZEN like every vector door; a delta
+    * batch is one shuffle-free quantize+assign projection; gen
+    * machinery identical. Serves the int8 probe
+    * ([[Similarity.sq8TopKIndexedPruned]]), optionally with the
+    * `Fixed` exact tail or the `Margin`-routed one
+    * ([[Similarity.sq8TopKIndexedAdaptiveRerank]]). */
+  final class IvfSq8Door(cents: Seq[(Long, Array[Double])])
+      extends VectorDoor(Quantizer(cents, None)) {
     def index(batch: DataFrame): DataFrame =
       Similarity.sq8Assign(batch, cents)
-    def stamp(rows: DataFrame, gen: Long): DataFrame =
-      Similarity.ivfStampGen(rows, gen)
-    def tombstones(ids: DataFrame, uptoGen: Long): DataFrame =
-      Similarity.ivfGenTombstones(ids, col(idName), uptoGen)
-    def applyTombstones(rows: DataFrame, tombs: DataFrame): DataFrame =
-      Similarity.ivfApplyGenTombstones(rows, tombs)
-    override val quantizer: Option[Quantizer] =
-      Some(Quantizer(cents, None))
+    override def probe(q: Retrieval.Queries, view: DataFrame, legK: Int,
+                       nprobe: Int, allowed: Option[DataFrame],
+                       rerank: Option[(Retrieval.Rerank, DataFrame)])
+        : DataFrame = (q, rerank) match {
+      case (Retrieval.Vecs(v), Some((Retrieval.Margin(ppm, c), vectors))) =>
+        Similarity.sq8TopKIndexedAdaptiveRerank(v, view, cents, legK,
+          nprobe, c, ppm, vectors, allowed)
+      case (Retrieval.Vecs(v), _) =>
+        Similarity.sq8TopKIndexedPruned(v, view, cents, legK, nprobe,
+          allowed, fixedTail(rerank))
+      case (Retrieval.Scalar(qid, v, _),
+            None | Some((_: Retrieval.Fixed, _))) =>
+        Similarity.sq8TopKIndexedScalar(qid, v, view, cents, legK, nprobe,
+          allowed, fixedTail(rerank))
+      case _ => super.probe(q, view, legK, nprobe, allowed, rerank)
+    }
   }
 
   /** The RESIDUAL-encoded PQ-code door (IVFADC — the accuracy-per-byte
@@ -398,22 +462,13 @@ object Maintenance {
     * frozen residual codebooks ([[Similarity.ivfPqResidualTrain]], run
     * once at door construction). Delta cost, gen machinery, and
     * retirement are identical to [[IvfPqDoor]]; serve through
-    * [[Similarity.ivfPqResidualTopKIndexedPruned]]. */
+    * [[Similarity.ivfPqResidualTopKIndexedPruned]] (it has no hybrid
+    * [[probe]]). */
   final class IvfPqResidualDoor(cents: Seq[(Long, Array[Double])],
                                 rcbs: Array[Array[Array[Double]]])
-      extends Door {
-    val idName = "nid"
-    val batchId: Column = col("vec_id")
+      extends VectorDoor(Quantizer(cents, Some(rcbs))) {
     def index(batch: DataFrame): DataFrame =
       Similarity.ivfPqResidualAssign(batch, cents, rcbs)
-    def stamp(rows: DataFrame, gen: Long): DataFrame =
-      Similarity.ivfStampGen(rows, gen)
-    def tombstones(ids: DataFrame, uptoGen: Long): DataFrame =
-      Similarity.ivfGenTombstones(ids, col(idName), uptoGen)
-    def applyTombstones(rows: DataFrame, tombs: DataFrame): DataFrame =
-      Similarity.ivfApplyGenTombstones(rows, tombs)
-    override val quantizer: Option[Quantizer] =
-      Some(Quantizer(cents, Some(rcbs)))
   }
 
   final class SigDoor(idCol: String, text: Column, shingleN: Int,
@@ -447,6 +502,13 @@ object Maintenance {
                    stats: Option[DataFrame] = None): State =
     State(emptyTombstones(spark, door), stats.map(snap), 1L)
 
+  private val log = org.slf4j.LoggerFactory.getLogger(Maintenance.getClass)
+
+  /** Count of [[saveState]] tombstone-count observation timeouts — each
+    * one costs the caller a re-count job (the degraded arm), exposed
+    * like the streaming layer's `appendObserveTimeouts`. */
+  val stateObserveTimeouts = new java.util.concurrent.atomic.AtomicLong()
+
   /** Persist the serving state next to its store: tombstones as
     * parquet, the scalars AND the 1-row stats inside the properties
     * file — ONE write action per snapshot. With the store itself
@@ -471,7 +533,8 @@ object Maintenance {
     // riding it on the write lets the streaming applyBatch skip the
     // trigger's separate count() job per batch. Bounded await, the
     // VersionedStore.append discipline — a timeout degrades to the
-    // caller re-counting, never a hang or a silently wrong decision.
+    // caller re-counting, never a hang or a silently wrong decision,
+    // and is logged and counted ([[stateObserveTimeouts]]).
     var observed = 0L
     if (!tombstonesKnownEmpty) {
       val obs = org.apache.spark.sql.Observation()
@@ -492,7 +555,13 @@ object Maintenance {
           scala.concurrent.duration.Duration(timeoutSec, "s"))
           .getAs[Long]("rows")
       } catch {
-        case _: java.util.concurrent.TimeoutException => -1L
+        case _: java.util.concurrent.TimeoutException =>
+          stateObserveTimeouts.incrementAndGet()
+          log.warn(s"tombstone-count observation for $dir timed out " +
+            s"after ${timeoutSec}s (spark.graft.appendObserveTimeoutSec)" +
+            " — the compaction trigger re-counts the tombstones with " +
+            "an extra Spark job for this batch")
+          -1L
       }
     }
     // through the Hadoop FS layer like the parquet half, so the

@@ -39,8 +39,8 @@ object Retrieval {
     val ids = queryVecs.select(col("vec_id")).limit(2).collect()
     require(ids.length <= 1, "this entry point fuses a SINGLE query; " +
       s"got ${ids.length}+ rows in queryVecs — use the " +
-      "batched variant (hybridTopKBatch / hybridFromStoresBatch) for " +
-      "multi-query frames")
+      "batched variant (hybridTopKBatch / hybridFromStores with Batch " +
+      "queries) for multi-query frames")
   }
 
   /** Rank a BM25 `(doc_id, score)` top-k result 1..k. The input is
@@ -79,66 +79,160 @@ object Retrieval {
       .limit(k)
   }
 
-  /** CONSISTENT hybrid over two tailer-maintained stores
-    * ([[graft.streaming.IndexMaintenanceStream]] layouts under
-    * `bmDir` and `ivfDir`, fed by the same logical mutation stream):
-    * both stores resolve AT THE SAME COMMITTED BATCH — the newest
-    * batch BOTH state pointers have committed — so a mutation that
-    * landed in one store but not yet the other is invisible to the
-    * fused answer instead of serving a lexical leg and a vector leg
-    * from different corpus versions. Rides [[graft.streaming
-    * .IndexMaintenanceStream.viewAt]], so the older store's view costs
-    * nothing extra and the newer store's view is reconstructable for
-    * at least the reader-grace window (the two pointers can only drift
-    * by the stream's in-flight batches — far inside it). */
+  /** The query shapes a store-backed hybrid serves. */
+  sealed trait Queries
+  /** One query: a one-row `(vec_id, embedding)` frame (guarded — see
+    * [[requireSingleQuery]]) and its terms; fused by [[rrfFuse]]. */
+  final case class Frame(vecs: DataFrame, terms: Seq[String])
+      extends Queries
+  /** B queries: `vecs` carries each qid as a `vec_id` row, `terms`
+    * pairs each qid with its term list; fused per qid by
+    * [[rrfFuseByQuery]]. */
+  final case class Batch(vecs: DataFrame, terms: Seq[(Long, Seq[String])])
+      extends Queries
+  /** One query as a driver-side `(qid, vector)`: single-query at compile
+    * time, so the probe pays neither the guard job nor the
+    * cell-resolution job (cells resolve through
+    * [[Similarity.probeCellsScalar]]). */
+  final case class Scalar(qid: Long, vec: Seq[Double], terms: Seq[String])
+      extends Queries
+  /** The query frame of a [[Frame]] or [[Batch]]. */
+  object Vecs {
+    def unapply(q: Queries): Option[DataFrame] = q match {
+      case Frame(v, _) => Some(v)
+      case Batch(v, _) => Some(v)
+      case _: Scalar => None
+    }
+  }
+
+  /** The exact tail over a quantized leg: `Fixed` refetches the full
+    * vectors of every query's `c` candidates; `Margin` (SQ8 only) does
+    * so only for queries whose int8 cut-line margin is under `ppm`
+    * ([[Similarity.sq8TopKIndexedAdaptiveRerank]] — read `ppm` off the
+    * [[Similarity.sq8CutMargins]] census). */
+  sealed trait Rerank
+  final case class Fixed(c: Int) extends Rerank
+  final case class Margin(ppm: Long, c: Int) extends Rerank
+
+  /** CONSISTENT store-backed hybrid over tailer-maintained stores
+    * ([[graft.streaming.IndexMaintenanceStream]] layouts fed by the
+    * same logical mutation stream): the BM25 store `lex`, the vector
+    * store `vec` and, when `rerank` is set, the full-vector store that
+    * funds the exact tail all resolve AT THE SAME COMMITTED BATCH — the
+    * newest batch EVERY state pointer has committed — so a mutation
+    * that landed in one store but not yet another is invisible to the
+    * fused answer, and a quantized ranking and its rerank refetch never
+    * mix corpus versions. Rides [[graft.streaming.IndexMaintenanceStream
+    * .viewAt]], so the older store's view costs nothing extra and the
+    * newer stores' views are reconstructable for at least the
+    * reader-grace window.
+    *
+    * The vector leg is the door's own [[Maintenance.VectorDoor.probe]]
+    * under its frozen tables: the full-vector cosine probe, PQ-code ADC
+    * (+ `Fixed` tail) or the int8 probe (+ `Fixed` or `Margin` tail).
+    * For [[Batch]] queries both index scans amortize across the batch —
+    * [[Bm25Index.searchBatch]] reads the UNION of all queries' posting
+    * buckets once and the vector probe resolves the union of all
+    * queries' cells into one partition-pruned scan — so work is
+    * O(touched buckets + probed cells), not O(B × either).
+    *
+    * `weights` = per-leg ppm (lexical, vector), the [[rrfFuse]] knob.
+    * `allowed` (first column = allowed doc/vector ids) masks each leg's
+    * probe-sized candidates BEFORE its top-k with global scoring kept
+    * (Lucene-filter / FAISS-IDSelector semantics), so the slice, the
+    * batch amortization and the rerank tail compose. */
   def hybridFromStores(spark: org.apache.spark.sql.SparkSession,
-                       bmDoor: Maintenance.Door, bmDir: String,
-                       nBuckets: Int,
-                       ivfDoor: Maintenance.Door, ivfDir: String,
-                       cents: Seq[(Long, Array[Double])],
-                       queryVecs: DataFrame, qTerms: Seq[String],
-                       k: Int, legK: Int = 20, nprobe: Int = 4,
-                       k0: Int = 60): DataFrame = {
-    import graft.streaming.IndexMaintenanceStream
-    requireSingleQuery(queryVecs)
-    val asOf = math.min(
-      IndexMaintenanceStream.committedBatch(spark, bmDir),
-      IndexMaintenanceStream.committedBatch(spark, ivfDir))
-    val (bmView, bmStats) =
-      IndexMaintenanceStream.viewAt(spark, bmDoor, bmDir, asOf)
-    val (ivfView, _) =
-      IndexMaintenanceStream.viewAt(spark, ivfDoor, ivfDir, asOf)
+                       lex: (Maintenance.Bm25Door, String),
+                       vec: (Maintenance.VectorDoor, String),
+                       q: Queries, k: Int, legK: Int = 20,
+                       nprobe: Int = 4, k0: Int = 60,
+                       weights: Seq[Long] = Nil,
+                       allowed: Option[DataFrame] = None,
+                       rerank: Option[(Rerank, (Maintenance.Door, String))] =
+                         None): DataFrame = {
+    q match {
+      case Frame(v, _) => requireSingleQuery(v)
+      case _ =>
+    }
+    val views = storeViews(spark, Seq(lex, vec) ++ rerank.map(_._2))
+    val (bmView, bmStats) = views(0)
+    val nBuckets = lex._1.nBuckets
+    // the cell column rides along: the rerank tail pushes its literal
+    // probe-cell filter into the refetch scan too (both stores assign
+    // under the same frozen quantizer, so every candidate's current
+    // vector lives in a probed cell — Similarity.pruneVectors)
+    val tail = rerank.map { case (r, _) =>
+      r -> views(2)._1.select(col("cell"), col("nid"), col("ne")) }
     // bmView goes to search UNMATERIALIZED: search's own lazy
     // localCheckpoint holds only the bucket-pruned probe-sized posting
     // subset — an eager corpus-sized checkpoint here would defeat the
     // pruning on every serving query (and, under reliableCheckpoint,
     // leak one durable checkpoint dir per query)
-    val lex = rankLex(Bm25Index.search(bmView,
-      bmStats.get, qTerms, legK, nBuckets))
-    val vec = Similarity.ivfTopKIndexedPruned(queryVecs, ivfView, cents,
-      legK, nprobe)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0)
+    def fuseOne(terms: Seq[String]): DataFrame = {
+      val ids = allowed.map(a =>
+        a.select(col(a.columns.head).as("doc_id")))
+      val lexLeg = rankLex(ids.fold(
+        Bm25Index.search(bmView, bmStats.get, terms, legK, nBuckets))(a =>
+        Bm25Index.searchFiltered(bmView, bmStats.get, terms, legK,
+          nBuckets, a)))
+      val vecLeg = vec._1.probe(q, views(1)._1, legK, nprobe, ids, tail)
+        .select(col("nid").as("doc_id"), col("rank"))
+      rrfFuse(Seq(lexLeg, vecLeg), k, k0, weights)
+    }
+    q match {
+      case Batch(_, terms) =>
+        val lexLeg = allowed.fold(
+          Bm25Index.searchBatch(bmView, bmStats.get, terms, legK,
+            nBuckets))(a =>
+          Bm25Index.searchBatchFiltered(bmView, bmStats.get, terms, legK,
+            nBuckets, a))
+          .select(col("qid"), col("doc_id"), col("rank"))
+        val vecLeg = vec._1.probe(q, views(1)._1, legK, nprobe, allowed,
+          tail).select(col("qid"), col("nid").as("doc_id"), col("rank"))
+        rrfFuseByQuery(Seq(lexLeg, vecLeg), k, k0, weights)
+      case Frame(_, terms) => fuseOne(terms)
+      case Scalar(_, _, terms) => fuseOne(terms)
+    }
   }
 
-  /** The BATCHED store-backed hybrid — the deployment tier's shape:
-    * B queries answered from the two tailer-maintained stores at ONE
-    * consistent `asOf` (the min-committed-batch rule of
-    * [[hybridFromStores]]), with both index scans amortized across the
-    * batch — [[Bm25Index.searchBatch]] reads the UNION of all queries'
-    * posting buckets once, and the IVF probe resolves the union of all
-    * queries' cells into one partition-pruned scan
-    * ([[Similarity.ivfTopKIndexedPruned]] batches natively). Work is
-    * O(touched buckets + probed cells), not O(B × either) — the batch
-    * amortization [[Bm25Index.searchBatch]]'s spec pins, now riding the
-    * tombstone-filtered serving views. `weights` = per-leg ppm
-    * (lexical, vector), the same knob as [[rrfFuse]]. `allowed`
-    * (optional — first column = allowed doc/vector ids) is the
-    * metadata slice of [[hybridTopKIndexedFiltered]] on the batch
-    * tier: the mask semi-joins each leg's probe-sized candidates
-    * BEFORE its per-qid top-k (scoring stays global on both legs —
-    * Lucene-filter / FAISS-IDSelector semantics), so filtering and
-    * batch amortization compose instead of excluding each other. */
+  /** Resolve stores at ONE committed batch — the min over their state
+    * pointers, the [[hybridFromStores]] consistency rule. */
+  private def storeViews(spark: org.apache.spark.sql.SparkSession,
+                         stores: Seq[(Maintenance.Door, String)])
+      : Seq[(DataFrame, Option[DataFrame])] = {
+    import graft.streaming.IndexMaintenanceStream
+    val asOf = stores
+      .map(s => IndexMaintenanceStream.committedBatch(spark, s._2)).min
+    stores.map { case (door, dir) =>
+      IndexMaintenanceStream.viewAt(spark, door, dir, asOf) }
+  }
+
+  /** The forwards below keep the positional signatures of the batched
+    * per-tier facades. Their `nBuckets`/`cents`/`cbs` arguments are
+    * redundant with the doors, so they are CHECKED against them — a
+    * mismatch would probe the wrong buckets or cells — never dropped. */
+  private def bm25Door(door: Maintenance.Door,
+                       nBuckets: Int): Maintenance.Bm25Door = door match {
+    case d: Maintenance.Bm25Door if d.nBuckets == nBuckets => d
+    case d => throw new IllegalArgumentException(
+      s"$nBuckets buckets do not match the lexical door " +
+        s"${d.getClass.getSimpleName}")
+  }
+
+  private def frozenDoor(door: Maintenance.Door,
+                         cents: Seq[(Long, Array[Double])],
+                         cbs: Option[Array[Array[Array[Double]]]])
+      : Maintenance.VectorDoor = door match {
+    case d: Maintenance.VectorDoor if d.quantizer.get.sameTables(cents, cbs) =>
+      d
+    case d => throw new IllegalArgumentException(
+      "the given quantizer tables are not the frozen tables of " +
+        s"${d.getClass.getSimpleName}: its store was written under " +
+        "different centroids/codebooks")
+  }
+
+  /** [[hybridFromStores]] on [[Batch]] queries over the full-vector
+    * tier. */
   def hybridFromStoresBatch(spark: org.apache.spark.sql.SparkSession,
                             bmDoor: Maintenance.Door, bmDir: String,
                             nBuckets: Int,
@@ -150,29 +244,48 @@ object Retrieval {
                             k0: Int = 60,
                             weights: Seq[Long] = Nil,
                             allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    import graft.streaming.IndexMaintenanceStream
-    val asOf = math.min(
-      IndexMaintenanceStream.committedBatch(spark, bmDir),
-      IndexMaintenanceStream.committedBatch(spark, ivfDir))
-    val (bmView, bmStats) =
-      IndexMaintenanceStream.viewAt(spark, bmDoor, bmDir, asOf)
-    val (ivfView, _) =
-      IndexMaintenanceStream.viewAt(spark, ivfDoor, ivfDir, asOf)
-    val lex = allowed.fold(
-      Bm25Index.searchBatch(bmView, bmStats.get, queries, legK,
-        nBuckets))(a =>
-      Bm25Index.searchBatchFiltered(bmView, bmStats.get, queries, legK,
-        nBuckets, a))
-      .select(col("qid"), col("doc_id"), col("rank"))
-    val vec = allowed.fold(
-      Similarity.ivfTopKIndexedPruned(queryVecs, ivfView, cents,
-        legK, nprobe))(a =>
-      Similarity.ivfTopKIndexedPrunedFiltered(queryVecs, ivfView, cents,
-        legK, nprobe, a))
-      .select(col("qid"), col("nid").as("doc_id"), col("rank"))
-    rrfFuseByQuery(Seq(lex, vec), k, k0, weights)
-  }
+      : DataFrame =
+    hybridFromStores(spark, bm25Door(bmDoor, nBuckets) -> bmDir,
+      frozenDoor(ivfDoor, cents, None) -> ivfDir,
+      Batch(queryVecs, queries), k, legK, nprobe, k0, weights, allowed)
+
+  /** [[hybridFromStores]] on [[Batch]] queries over the PQ-code tier
+    * with the `Fixed(rerankC)` tail funded by the full-vector store. */
+  def hybridFromStoresPqBatch(spark: org.apache.spark.sql.SparkSession,
+                              bmDoor: Maintenance.Door, bmDir: String,
+                              nBuckets: Int,
+                              pqDoor: Maintenance.Door, pqDir: String,
+                              cents: Seq[(Long, Array[Double])],
+                              cbs: Array[Array[Array[Double]]],
+                              vecDoor: Maintenance.Door, vecDir: String,
+                              queryVecs: DataFrame,
+                              queries: Seq[(Long, Seq[String])], k: Int,
+                              legK: Int = 20, rerankC: Int = 100,
+                              nprobe: Int = 4, k0: Int = 60,
+                              weights: Seq[Long] = Nil,
+                              allowed: Option[DataFrame] = None)
+      : DataFrame =
+    hybridFromStores(spark, bm25Door(bmDoor, nBuckets) -> bmDir,
+      frozenDoor(pqDoor, cents, Some(cbs)) -> pqDir,
+      Batch(queryVecs, queries), k, legK, nprobe, k0, weights, allowed,
+      Some(Fixed(rerankC) -> (vecDoor -> vecDir)))
+
+  /** [[hybridFromStores]] on [[Batch]] queries over the SQ8 tier. */
+  def hybridFromStoresSq8Batch(spark: org.apache.spark.sql.SparkSession,
+                               bmDoor: Maintenance.Door, bmDir: String,
+                               nBuckets: Int,
+                               sq8Door: Maintenance.Door, sq8Dir: String,
+                               cents: Seq[(Long, Array[Double])],
+                               queryVecs: DataFrame,
+                               queries: Seq[(Long, Seq[String])], k: Int,
+                               legK: Int = 20, nprobe: Int = 4,
+                               k0: Int = 60,
+                               weights: Seq[Long] = Nil,
+                               allowed: Option[DataFrame] = None)
+      : DataFrame =
+    hybridFromStores(spark, bm25Door(bmDoor, nBuckets) -> bmDir,
+      frozenDoor(sq8Door, cents, None) -> sq8Dir,
+      Batch(queryVecs, queries), k, legK, nprobe, k0, weights, allowed)
 
   /** Index-free hybrid top-k: BM25-score `docs` for `qTerms` and
     * cosine-rank `emb` against the embedding of `qid`, fuse with RRF
@@ -313,349 +426,6 @@ object Retrieval {
       ivfIndex, cents, legK, nprobe, ids)
       .select(col("nid").as("doc_id"), col("rank"))
     rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** [[hybridFromStores]]' scalar twin: the consistent two-store
-    * serving read with the scalar door's job cuts (no guard job, no
-    * cell-resolution job — see [[hybridTopKIndexedScalar]]). */
-  def hybridFromStoresScalar(spark: org.apache.spark.sql.SparkSession,
-                             bmDoor: Maintenance.Door, bmDir: String,
-                             nBuckets: Int,
-                             ivfDoor: Maintenance.Door, ivfDir: String,
-                             cents: Seq[(Long, Array[Double])],
-                             query: (Long, Seq[Double]),
-                             qTerms: Seq[String],
-                             k: Int, legK: Int = 20, nprobe: Int = 4,
-                             k0: Int = 60,
-                             weights: Seq[Long] = Nil,
-                             allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    import graft.streaming.IndexMaintenanceStream
-    val asOf = math.min(
-      IndexMaintenanceStream.committedBatch(spark, bmDir),
-      IndexMaintenanceStream.committedBatch(spark, ivfDir))
-    val (bmView, bmStats) =
-      IndexMaintenanceStream.viewAt(spark, bmDoor, bmDir, asOf)
-    val (ivfView, _) =
-      IndexMaintenanceStream.viewAt(spark, ivfDoor, ivfDir, asOf)
-    val ids = allowed.map(a =>
-      a.select(col(a.columns.head).as("doc_id")))
-    val lex = rankLex(ids.fold(
-      Bm25Index.search(bmView, bmStats.get, qTerms, legK, nBuckets))(a =>
-      Bm25Index.searchFiltered(bmView, bmStats.get, qTerms, legK,
-        nBuckets, a)))
-    val vec = Similarity.ivfTopKIndexedScalar(query._1, query._2,
-      ivfView, cents, legK, nprobe, ids)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** Hybrid serving from the MEMORY-BOUNDED code-store tier — the
-    * [[hybridFromStores]] contract with the vector leg served from a
-    * tailer-maintained PQ-CODE store ([[Maintenance.IvfPqDoor]] rows:
-    * 8 + m bytes/vector in the ADC working set) plus the exact-rerank
-    * tail funded by the full-vector store
-    * ([[Similarity.ivfPqTopKIndexedPrunedRerank]]): ADC ranks `rerankC`
-    * candidates from the code store, only those queries × rerankC ids
-    * refetch full vectors from `vecDir`'s live view. ALL THREE stores
-    * (BM25, PQ codes, full vectors) resolve at ONE committed batch —
-    * the min-committed rule — so the fused answer never mixes corpus
-    * versions across legs or between the ADC stage and its rerank
-    * refetch. When `rerankC` covers the probed candidate pool this
-    * serves EXACTLY what the full-vector [[hybridFromStores]] serves
-    * (spec-pinned) — the knob trades full-vector bytes touched for
-    * recall, measured on the 1M ledger. */
-  def hybridFromStoresPq(spark: org.apache.spark.sql.SparkSession,
-                         bmDoor: Maintenance.Door, bmDir: String,
-                         nBuckets: Int,
-                         pqDoor: Maintenance.Door, pqDir: String,
-                         cents: Seq[(Long, Array[Double])],
-                         cbs: Array[Array[Array[Double]]],
-                         vecDoor: Maintenance.Door, vecDir: String,
-                         queryVecs: DataFrame, qTerms: Seq[String],
-                         k: Int, legK: Int = 20, rerankC: Int = 100,
-                         nprobe: Int = 4, k0: Int = 60,
-                         weights: Seq[Long] = Nil,
-                         allowed: Option[DataFrame] = None): DataFrame = {
-    requireSingleQuery(queryVecs)
-    val (bmView, bmStats, pqView, vectors) =
-      pqStoreViews(spark, bmDoor, bmDir, pqDoor, pqDir, vecDoor, vecDir)
-    val ids = allowed.map(a =>
-      a.select(col(a.columns.head).as("doc_id")))
-    val lex = rankLex(ids.fold(
-      Bm25Index.search(bmView, bmStats.get, qTerms, legK, nBuckets))(a =>
-      Bm25Index.searchFiltered(bmView, bmStats.get, qTerms, legK,
-        nBuckets, a)))
-    val vec = Similarity.ivfPqTopKIndexedPrunedRerank(queryVecs, pqView,
-      cents, cbs, legK, nprobe, rerankC, vectors, ids)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** The BATCHED code-store hybrid — [[hybridFromStoresBatch]]'s shape
-    * on the PQ tier: B queries, one union-of-buckets lexical pass, one
-    * union-of-probed-cells ADC pass over the code store, ONE
-    * queries × rerankC full-vector refetch for the whole batch, all
-    * three stores at the min-committed batch. */
-  def hybridFromStoresPqBatch(spark: org.apache.spark.sql.SparkSession,
-                              bmDoor: Maintenance.Door, bmDir: String,
-                              nBuckets: Int,
-                              pqDoor: Maintenance.Door, pqDir: String,
-                              cents: Seq[(Long, Array[Double])],
-                              cbs: Array[Array[Array[Double]]],
-                              vecDoor: Maintenance.Door, vecDir: String,
-                              queryVecs: DataFrame,
-                              queries: Seq[(Long, Seq[String])], k: Int,
-                              legK: Int = 20, rerankC: Int = 100,
-                              nprobe: Int = 4, k0: Int = 60,
-                              weights: Seq[Long] = Nil,
-                              allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    val (bmView, bmStats, pqView, vectors) =
-      pqStoreViews(spark, bmDoor, bmDir, pqDoor, pqDir, vecDoor, vecDir)
-    val lex = allowed.fold(
-      Bm25Index.searchBatch(bmView, bmStats.get, queries, legK,
-        nBuckets))(a =>
-      Bm25Index.searchBatchFiltered(bmView, bmStats.get, queries, legK,
-        nBuckets, a))
-      .select(col("qid"), col("doc_id"), col("rank"))
-    val vec = Similarity.ivfPqTopKIndexedPrunedRerank(queryVecs, pqView,
-      cents, cbs, legK, nprobe, rerankC, vectors, allowed)
-      .select(col("qid"), col("nid").as("doc_id"), col("rank"))
-    rrfFuseByQuery(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** [[hybridFromStoresPq]]'s scalar twin: the code-store serving read
-    * with the scalar door's job cuts — no guard job, no cell-resolution
-    * job ([[Similarity.ivfPqTopKIndexedScalar]] resolves probe cells
-    * driver-side and builds the ADC LUT from the LocalRelation query
-    * frame). */
-  def hybridFromStoresPqScalar(spark: org.apache.spark.sql.SparkSession,
-                               bmDoor: Maintenance.Door, bmDir: String,
-                               nBuckets: Int,
-                               pqDoor: Maintenance.Door, pqDir: String,
-                               cents: Seq[(Long, Array[Double])],
-                               cbs: Array[Array[Array[Double]]],
-                               vecDoor: Maintenance.Door, vecDir: String,
-                               query: (Long, Seq[Double]),
-                               qTerms: Seq[String],
-                               k: Int, legK: Int = 20, rerankC: Int = 100,
-                               nprobe: Int = 4, k0: Int = 60,
-                               weights: Seq[Long] = Nil,
-                               allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    val (bmView, bmStats, pqView, vectors) =
-      pqStoreViews(spark, bmDoor, bmDir, pqDoor, pqDir, vecDoor, vecDir)
-    val ids = allowed.map(a =>
-      a.select(col(a.columns.head).as("doc_id")))
-    val lex = rankLex(ids.fold(
-      Bm25Index.search(bmView, bmStats.get, qTerms, legK, nBuckets))(a =>
-      Bm25Index.searchFiltered(bmView, bmStats.get, qTerms, legK,
-        nBuckets, a)))
-    val vec = Similarity.ivfPqTopKIndexedScalar(query._1, query._2,
-      pqView, cents, cbs, legK, nprobe,
-      rerank = Some((rerankC, vectors)), allowed = ids)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** Hybrid serving from the SQ8 tier — the middle of the
-    * bytes-vs-recall spectrum serving the fused ranker: the vector leg
-    * probes a tailer-maintained [[Maintenance.IvfSq8Door]] store
-    * ([[Similarity.sq8TopKIndexedPruned]] — int8 cosine, no rerank
-    * tail needed at this tier), both stores at the min-committed
-    * batch. `allowed` masks both legs; `weights` the per-leg ppm
-    * knob. */
-  def hybridFromStoresSq8(spark: org.apache.spark.sql.SparkSession,
-                          bmDoor: Maintenance.Door, bmDir: String,
-                          nBuckets: Int,
-                          sq8Door: Maintenance.Door, sq8Dir: String,
-                          cents: Seq[(Long, Array[Double])],
-                          queryVecs: DataFrame, qTerms: Seq[String],
-                          k: Int, legK: Int = 20, nprobe: Int = 4,
-                          k0: Int = 60,
-                          weights: Seq[Long] = Nil,
-                          allowed: Option[DataFrame] = None): DataFrame = {
-    requireSingleQuery(queryVecs)
-    val (bmView, bmStats, sq8View) =
-      sq8StoreViews(spark, bmDoor, bmDir, sq8Door, sq8Dir)
-    val ids = allowed.map(a =>
-      a.select(col(a.columns.head).as("doc_id")))
-    val lex = rankLex(ids.fold(
-      Bm25Index.search(bmView, bmStats.get, qTerms, legK, nBuckets))(a =>
-      Bm25Index.searchFiltered(bmView, bmStats.get, qTerms, legK,
-        nBuckets, a)))
-    val vec = Similarity.sq8TopKIndexedPruned(queryVecs, sq8View, cents,
-      legK, nprobe, ids)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** The BATCHED SQ8-tier hybrid: B queries, one union-of-buckets
-    * lexical pass, one union-of-probed-cells int8-cosine pass, fusion
-    * per qid — [[hybridFromStoresBatch]]'s shape on the quantized
-    * store. */
-  def hybridFromStoresSq8Batch(spark: org.apache.spark.sql.SparkSession,
-                               bmDoor: Maintenance.Door, bmDir: String,
-                               nBuckets: Int,
-                               sq8Door: Maintenance.Door, sq8Dir: String,
-                               cents: Seq[(Long, Array[Double])],
-                               queryVecs: DataFrame,
-                               queries: Seq[(Long, Seq[String])], k: Int,
-                               legK: Int = 20, nprobe: Int = 4,
-                               k0: Int = 60,
-                               weights: Seq[Long] = Nil,
-                               allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    val (bmView, bmStats, sq8View) =
-      sq8StoreViews(spark, bmDoor, bmDir, sq8Door, sq8Dir)
-    val lex = allowed.fold(
-      Bm25Index.searchBatch(bmView, bmStats.get, queries, legK,
-        nBuckets))(a =>
-      Bm25Index.searchBatchFiltered(bmView, bmStats.get, queries, legK,
-        nBuckets, a))
-      .select(col("qid"), col("doc_id"), col("rank"))
-    val vec = Similarity.sq8TopKIndexedPruned(queryVecs, sq8View, cents,
-      legK, nprobe, allowed)
-      .select(col("qid"), col("nid").as("doc_id"), col("rank"))
-    rrfFuseByQuery(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** [[hybridFromStoresSq8]]'s scalar twin — no guard job, no
-    * cell-resolution job ([[Similarity.sq8TopKIndexedScalar]]). */
-  def hybridFromStoresSq8Scalar(spark: org.apache.spark.sql.SparkSession,
-                                bmDoor: Maintenance.Door, bmDir: String,
-                                nBuckets: Int,
-                                sq8Door: Maintenance.Door, sq8Dir: String,
-                                cents: Seq[(Long, Array[Double])],
-                                query: (Long, Seq[Double]),
-                                qTerms: Seq[String],
-                                k: Int, legK: Int = 20, nprobe: Int = 4,
-                                k0: Int = 60,
-                                weights: Seq[Long] = Nil,
-                                allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    val (bmView, bmStats, sq8View) =
-      sq8StoreViews(spark, bmDoor, bmDir, sq8Door, sq8Dir)
-    val ids = allowed.map(a =>
-      a.select(col(a.columns.head).as("doc_id")))
-    val lex = rankLex(ids.fold(
-      Bm25Index.search(bmView, bmStats.get, qTerms, legK, nBuckets))(a =>
-      Bm25Index.searchFiltered(bmView, bmStats.get, qTerms, legK,
-        nBuckets, a)))
-    val vec = Similarity.sq8TopKIndexedScalar(query._1, query._2,
-      sq8View, cents, legK, nprobe, ids)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  private def sq8StoreViews(spark: org.apache.spark.sql.SparkSession,
-                            bmDoor: Maintenance.Door, bmDir: String,
-                            sq8Door: Maintenance.Door, sq8Dir: String)
-      : (DataFrame, Option[DataFrame], DataFrame) = {
-    import graft.streaming.IndexMaintenanceStream
-    val asOf = math.min(
-      IndexMaintenanceStream.committedBatch(spark, bmDir),
-      IndexMaintenanceStream.committedBatch(spark, sq8Dir))
-    val (bmView, bmStats) =
-      IndexMaintenanceStream.viewAt(spark, bmDoor, bmDir, asOf)
-    val (sq8View, _) =
-      IndexMaintenanceStream.viewAt(spark, sq8Door, sq8Dir, asOf)
-    (bmView, bmStats, sq8View)
-  }
-
-  /** The ADAPTIVE-TIER hybrid — the margin router serving the fused
-    * ranker from THREE stores at one min-committed batch: the vector
-    * leg probes the SQ8 store and routes only margin-uncertain
-    * queries' candidates through the exact tail funded by the
-    * FULL-VECTOR store ([[Similarity.sq8TopKIndexedAdaptiveRerank]]),
-    * so the deployment's full-vector bytes scale with the query mix's
-    * actual cut-line uncertainty (read `marginPpm` off the
-    * [[Similarity.sq8CutMargins]] census). The min-committed rule
-    * covers the refetch: the int8 ranking and the exact tail can
-    * never mix corpus versions. At marginPpm = 0 this serves exactly
-    * [[hybridFromStoresSq8]]; at a covering margin it is the SQ8 tier
-    * with the full tail. */
-  def hybridFromStoresSq8Adaptive(spark: org.apache.spark.sql.SparkSession,
-                                  bmDoor: Maintenance.Door, bmDir: String,
-                                  nBuckets: Int,
-                                  sq8Door: Maintenance.Door,
-                                  sq8Dir: String,
-                                  cents: Seq[(Long, Array[Double])],
-                                  vecDoor: Maintenance.Door,
-                                  vecDir: String,
-                                  queryVecs: DataFrame,
-                                  qTerms: Seq[String],
-                                  k: Int, legK: Int = 20,
-                                  nprobe: Int = 4, rerankC: Int = 100,
-                                  marginPpm: Long = 0L, k0: Int = 60,
-                                  weights: Seq[Long] = Nil,
-                                  allowed: Option[DataFrame] = None)
-      : DataFrame = {
-    requireSingleQuery(queryVecs)
-    val (bmView, bmStats, sq8View, vectors) =
-      sq8AdaptiveStoreViews(spark, bmDoor, bmDir, sq8Door, sq8Dir,
-        vecDoor, vecDir)
-    val ids = allowed.map(a =>
-      a.select(col(a.columns.head).as("doc_id")))
-    val lex = rankLex(ids.fold(
-      Bm25Index.search(bmView, bmStats.get, qTerms, legK, nBuckets))(a =>
-      Bm25Index.searchFiltered(bmView, bmStats.get, qTerms, legK,
-        nBuckets, a)))
-    val vec = Similarity.sq8TopKIndexedAdaptiveRerank(queryVecs,
-      sq8View, cents, legK, nprobe, rerankC, marginPpm, vectors, ids)
-      .select(col("nid").as("doc_id"), col("rank"))
-    rrfFuse(Seq(lex, vec), k, k0, weights)
-  }
-
-  /** Resolve the adaptive tier's three stores (BM25 postings, SQ8
-    * codes, full vectors) at ONE committed batch, shaping the
-    * full-vector view as the cell-carrying side table the adaptive
-    * tail's cell-pruned refetch takes. */
-  private def sq8AdaptiveStoreViews(
-      spark: org.apache.spark.sql.SparkSession,
-      bmDoor: Maintenance.Door, bmDir: String,
-      sq8Door: Maintenance.Door, sq8Dir: String,
-      vecDoor: Maintenance.Door, vecDir: String)
-      : (DataFrame, Option[DataFrame], DataFrame, DataFrame) = {
-    import graft.streaming.IndexMaintenanceStream
-    val asOf = Seq(bmDir, sq8Dir, vecDir)
-      .map(IndexMaintenanceStream.committedBatch(spark, _)).min
-    val (bmView, bmStats) =
-      IndexMaintenanceStream.viewAt(spark, bmDoor, bmDir, asOf)
-    val (sq8View, _) =
-      IndexMaintenanceStream.viewAt(spark, sq8Door, sq8Dir, asOf)
-    val (vecView, _) =
-      IndexMaintenanceStream.viewAt(spark, vecDoor, vecDir, asOf)
-    (bmView, bmStats, sq8View,
-      vecView.select(col("cell"), col("nid"), col("ne")))
-  }
-
-  /** Resolve the three code-tier stores (BM25 postings, PQ codes, full
-    * vectors) at ONE committed batch — min over the three pointers, the
-    * [[hybridFromStores]] consistency rule extended to the rerank
-    * refetch — and shape the full-vector view as the `(nid, ne)` side
-    * table the rerank tail takes. */
-  private def pqStoreViews(spark: org.apache.spark.sql.SparkSession,
-                           bmDoor: Maintenance.Door, bmDir: String,
-                           pqDoor: Maintenance.Door, pqDir: String,
-                           vecDoor: Maintenance.Door, vecDir: String)
-      : (DataFrame, Option[DataFrame], DataFrame, DataFrame) = {
-    import graft.streaming.IndexMaintenanceStream
-    val asOf = Seq(bmDir, pqDir, vecDir)
-      .map(IndexMaintenanceStream.committedBatch(spark, _)).min
-    val (bmView, bmStats) =
-      IndexMaintenanceStream.viewAt(spark, bmDoor, bmDir, asOf)
-    val (pqView, _) =
-      IndexMaintenanceStream.viewAt(spark, pqDoor, pqDir, asOf)
-    val (vecView, _) =
-      IndexMaintenanceStream.viewAt(spark, vecDoor, vecDir, asOf)
-    // the cell column rides along: the rerank tail pushes its literal
-    // probe-cell filter into the refetch scan too (both stores assign
-    // under the same frozen quantizer, so every candidate's current
-    // vector lives in a probed cell — Similarity.pruneVectors)
-    (bmView, bmStats, pqView,
-      vecView.select(col("cell"), col("nid"), col("ne")))
   }
 
   /** RETRIEVAL EVALUATION — the harness that closes the loop on every

@@ -48,4 +48,38 @@ class InParallelSpec extends AnyFunSuite {
     assert(!siblingFinished.get,
       "sibling chain kept running after inParallel rethrew")
   }
+
+  test("siblings are cancelled in COMPLETION order: a fast failure " +
+      "interrupts the other chains before an earlier-submitted slow " +
+      "chain finishes") {
+    val t0 = System.nanoTime()
+    val slowDoneAt = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val lastInterruptedAt = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val lastStarted = new java.util.concurrent.CountDownLatch(1)
+    intercept[IllegalStateException] {
+      PipelineQueries.inParallel(
+        () => {
+          Thread.sleep(3000) // submitted first, still running
+          slowDoneAt.set(System.nanoTime() - t0)
+        },
+        () => {
+          lastStarted.await()
+          throw new IllegalStateException("second chain fails at once")
+        },
+        () => {
+          lastStarted.countDown()
+          try Thread.sleep(30000)
+          catch {
+            case _: InterruptedException =>
+              lastInterruptedAt.set(System.nanoTime() - t0)
+          }
+        })
+    }
+    assert(lastInterruptedAt.get >= 0L,
+      "the third chain was not interrupted")
+    assert(slowDoneAt.get < 0L || lastInterruptedAt.get < slowDoneAt.get,
+      "the failure waited for the earlier-submitted slow chain: " +
+        s"third chain interrupted at ${lastInterruptedAt.get} ns, " +
+        s"slow chain finished at ${slowDoneAt.get} ns")
+  }
 }

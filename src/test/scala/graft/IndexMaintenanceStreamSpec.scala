@@ -617,8 +617,8 @@ class IndexMaintenanceStreamSpec extends AnyFunSuite {
     assert(IndexMaintenanceStream.committedBatch(spark, ivfDir) === 0L)
     val q = vecs(Seq(7L))
     def hybrid(): Seq[(Long, Long, Long)] =
-      Retrieval.hybridFromStores(spark, bmDoor, bmDir, nBuckets,
-        ivfDoor, ivfDir, cents, q, qTerms, k = 10, legK = 12,
+      Retrieval.hybridFromStores(spark, bmDoor -> bmDir,
+        ivfDoor -> ivfDir, Retrieval.Frame(q, qTerms), k = 10, legK = 12,
         nprobe = 8)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSeq
@@ -677,6 +677,31 @@ class IndexMaintenanceStreamSpec extends AnyFunSuite {
         s"store-batched filtered fusion diverged for qid $qid")
       assert(alone.forall(_._2 % 2 == 0),
         s"qid $qid leaked a disallowed doc through the store tier")
+    }
+    // the full-tier SCALAR shape through the same facade: ≡ the Frame
+    // shape and ≡ the Batch shape's rows for its qid, with and without
+    // the mask
+    def fused(qs: Retrieval.Queries,
+              mask: Option[DataFrame]): DataFrame =
+      Retrieval.hybridFromStores(spark, bmDoor -> bmDir,
+        ivfDoor -> ivfDir, qs, k = 10, legK = 12, nprobe = 8,
+        allowed = mask)
+    def ranked(df: DataFrame): Seq[(Long, Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .toSeq
+    for (mask <- Seq(None, Some(allowed)); (qid, terms) <- qb) {
+      val vec = vecs(Seq(qid)).collect().head.getSeq[Float](1)
+        .map(_.toDouble)
+      val scalar = ranked(fused(Retrieval.Scalar(qid, vec, terms), mask))
+      assert(scalar.nonEmpty)
+      assert(scalar === ranked(fused(
+        Retrieval.Frame(vecs(Seq(qid)), terms), mask)),
+        s"qid $qid (mask=${mask.isDefined}): Scalar diverged from Frame")
+      assert(scalar === ranked(fused(
+        Retrieval.Batch(vecs(qb.map(_._1)), qb), mask)
+        .where(col("qid") === qid).orderBy("rank")
+        .select("doc_id", "rrf_ppm", "n_legs")),
+        s"qid $qid (mask=${mask.isDefined}): Scalar diverged from Batch")
     }
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }

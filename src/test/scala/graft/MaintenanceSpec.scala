@@ -708,4 +708,37 @@ class MaintenanceSpec extends AnyFunSuite {
       === b.tombstones.orderBy("doc_id").collect().toSeq)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
+
+  test("saveState: a timed-out tombstone-count observation returns -1, " +
+      "and is counted and logged — never silent") {
+    val dir = java.nio.file.Files.createTempDirectory("mobs").toString
+    val door = new Maintenance.Bm25Door(col("text"), nBuckets)
+    val st = Maintenance.State(
+      door.tombstones(Seq(1L, 2L, 3L).toDF("doc_id"), 1L), None, 2L)
+    // hold the shared listener queue: the observation completes only
+    // when its query-execution event is delivered, which now waits
+    // behind this listener until the bounded await has given up
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val hold = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    spark.conf.set("spark.graft.appendObserveTimeoutSec", "1")
+    spark.sparkContext.addSparkListener(hold)
+    try {
+      val before = Maintenance.stateObserveTimeouts.get()
+      assert(Maintenance.saveState(st, s"$dir/state") === -1L)
+      assert(Maintenance.stateObserveTimeouts.get() === before + 1,
+        "the timeout arm must be counted — silent degradation")
+    } finally {
+      release.countDown()
+      spark.sparkContext.removeSparkListener(hold)
+      spark.conf.unset("spark.graft.appendObserveTimeoutSec")
+    }
+    // the snapshot itself was still written whole
+    assert(Maintenance.loadState(spark, s"$dir/state").tombstones.count()
+      === 3L)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
 }

@@ -19,6 +19,8 @@ import graft.streaming.IndexMaintenanceStream
   *    covers legK's candidate pool (the r16 verdict's done-criterion);
   *  - scalar PQ door ≡ the DataFrame door, with strictly fewer Spark
   *    actions (no cell-resolution job);
+  *  - the batched per-tier forwards refuse quantizer tables (or a
+  *    bucket count) that are not their doors' own;
   *  - a door reconstructed from the PERSISTED quantizer serves the
   *    pre-restart answer; a re-trained (different-table) door fails
   *    fast in applyBatch AND viewAt instead of silently re-keying;
@@ -159,20 +161,21 @@ class PqStoreSpec extends AnyFunSuite {
     val (bmDoor, bmDir, pqDoor, pqDir, vecDoor, vecDir, cents, cbs) =
       storeTriple(d, emb)
     val q = emb.where(col("vec_id") === 2L)
-    val pqServed = Retrieval.hybridFromStoresPq(spark, bmDoor, bmDir,
-      nBuckets, pqDoor, pqDir, cents, cbs, vecDoor, vecDir, q, qTerms,
-      k = 10, legK = 12, rerankC = 1000, nprobe = 3)
-    val fullServed = Retrieval.hybridFromStores(spark, bmDoor, bmDir,
-      nBuckets, vecDoor, vecDir, cents, q, qTerms,
+    val tail = Some(Retrieval.Fixed(1000) -> (vecDoor -> vecDir))
+    val pqServed = Retrieval.hybridFromStores(spark, bmDoor -> bmDir,
+      pqDoor -> pqDir, Retrieval.Frame(q, qTerms),
+      k = 10, legK = 12, nprobe = 3, rerank = tail)
+    val fullServed = Retrieval.hybridFromStores(spark, bmDoor -> bmDir,
+      vecDoor -> vecDir, Retrieval.Frame(q, qTerms),
       k = 10, legK = 12, nprobe = 3)
     assert(rows(pqServed) === rows(fullServed),
       "a pool-covering PQ leg must serve the full-vector hybrid answer")
     // the scalar door serves the same answer through the same stores
     val qVec = q.select("embedding").collect().head
       .getSeq[Float](0).map(_.toDouble)
-    val scalar = Retrieval.hybridFromStoresPqScalar(spark, bmDoor, bmDir,
-      nBuckets, pqDoor, pqDir, cents, cbs, vecDoor, vecDir, 2L -> qVec,
-      qTerms, k = 10, legK = 12, rerankC = 1000, nprobe = 3)
+    val scalar = Retrieval.hybridFromStores(spark, bmDoor -> bmDir,
+      pqDoor -> pqDir, Retrieval.Scalar(2L, qVec, qTerms),
+      k = 10, legK = 12, nprobe = 3, rerank = tail)
     assert(rows(scalar) === rows(pqServed),
       "the scalar PQ door changed the single-query answer")
     // the batched facade agrees with the single-query door per qid
@@ -201,10 +204,11 @@ class PqStoreSpec extends AnyFunSuite {
       qs, qids.map(_ -> qTerms), k = 10, legK = 12, rerankC = 40,
       nprobe = 3, allowed = Some(allowed))
     qids.foreach { qid =>
-      val single = Retrieval.hybridFromStoresPq(spark, bmDoor, bmDir,
-        nBuckets, pqDoor, pqDir, cents, cbs, vecDoor, vecDir,
-        emb.where(col("vec_id") === qid), qTerms, k = 10, legK = 12,
-        rerankC = 40, nprobe = 3, allowed = Some(allowed))
+      val single = Retrieval.hybridFromStores(spark, bmDoor -> bmDir,
+        pqDoor -> pqDir,
+        Retrieval.Frame(emb.where(col("vec_id") === qid), qTerms),
+        k = 10, legK = 12, nprobe = 3, allowed = Some(allowed),
+        rerank = Some(Retrieval.Fixed(40) -> (vecDoor -> vecDir)))
       assert(rows(batch.where(col("qid") === qid)
           .select("doc_id", "rrf_ppm", "n_legs")) ===
         rows(single.select("doc_id", "rrf_ppm", "n_legs")),
@@ -213,6 +217,44 @@ class PqStoreSpec extends AnyFunSuite {
       assert(batch.where(col("qid") === qid &&
         col("doc_id") % 3 =!= 0).count() === 0L)
     }
+    dropDirs(bmDir, pqDir, vecDir)
+  }
+
+  test("the batched per-tier forwards check the quantizer tables they " +
+      "are given against the door's frozen ones: equal tables serve, " +
+      "different tables fail loudly") {
+    val d = docs(60)
+    val emb = embeddings(60)
+    val (bmDoor, bmDir, pqDoor, pqDir, vecDoor, vecDir, cents, cbs) =
+      storeTriple(d, emb)
+    val q = emb.where(col("vec_id") < 3)
+    val qs = (0L until 3L).map(_ -> qTerms)
+    def full(c: Seq[(Long, Array[Double])]) =
+      Retrieval.hybridFromStoresBatch(spark, bmDoor, bmDir, nBuckets,
+        vecDoor, vecDir, c, q, qs, k = 5, legK = 8, nprobe = 3)
+    def pq(c: Seq[(Long, Array[Double])], b: Array[Array[Array[Double]]]) =
+      Retrieval.hybridFromStoresPqBatch(spark, bmDoor, bmDir, nBuckets,
+        pqDoor, pqDir, c, b, vecDoor, vecDir, q, qs, k = 5, legK = 8,
+        rerankC = 20, nprobe = 3)
+    // an equal-content COPY passes the hash check and serves the same
+    val copied = cents.map { case (id, v) => id -> v.clone() }
+    assert(rows(full(copied)) === rows(full(cents)))
+    assert(rows(pq(copied, cbs.map(_.map(_.clone())))) ===
+      rows(pq(cents, cbs)))
+    // re-trained tables would probe the wrong cells: refused up front
+    val other = Similarity.centroids(emb.where(col("vec_id") >= 7), 8)
+    intercept[IllegalArgumentException](full(other))
+    intercept[IllegalArgumentException](pq(other, cbs))
+    intercept[IllegalArgumentException](
+      pq(cents, Similarity.pqCodebooks(emb.where(col("vec_id") >= 7),
+        4, 8)))
+    intercept[IllegalArgumentException](
+      Retrieval.hybridFromStoresSq8Batch(spark, bmDoor, bmDir, nBuckets,
+        new Maintenance.IvfSq8Door(cents), vecDir, other, q, qs, k = 5))
+    // a bucket count the lexical door was not built with is refused too
+    intercept[IllegalArgumentException](
+      Retrieval.hybridFromStoresBatch(spark, bmDoor, bmDir, nBuckets * 2,
+        vecDoor, vecDir, cents, q, qs, k = 5))
     dropDirs(bmDir, pqDir, vecDir)
   }
 
@@ -254,17 +296,17 @@ class PqStoreSpec extends AnyFunSuite {
       vBatch, 0L)
     val q = emb.where(col("vec_id") === 2L)
     def adaptive(marginPpm: Long, rerankC: Int) =
-      Retrieval.hybridFromStoresSq8Adaptive(spark, bmDoor, bmDir,
-        nBuckets, sq8Door, sq8Dir, cents, vecDoor, vecDir, q, qTerms,
-        k = 10, legK = 12, nprobe = 3, rerankC = rerankC,
-        marginPpm = marginPpm)
-    val sq8Hybrid = Retrieval.hybridFromStoresSq8(spark, bmDoor, bmDir,
-      nBuckets, sq8Door, sq8Dir, cents, q, qTerms, k = 10, legK = 12,
+      Retrieval.hybridFromStores(spark, bmDoor -> bmDir, sq8Door -> sq8Dir,
+        Retrieval.Frame(q, qTerms), k = 10, legK = 12, nprobe = 3,
+        rerank = Some(
+          Retrieval.Margin(marginPpm, rerankC) -> (vecDoor -> vecDir)))
+    val sq8Hybrid = Retrieval.hybridFromStores(spark, bmDoor -> bmDir,
+      sq8Door -> sq8Dir, Retrieval.Frame(q, qTerms), k = 10, legK = 12,
       nprobe = 3)
     assert(rows(adaptive(0L, 40)) === rows(sq8Hybrid),
       "marginPpm=0 must serve the bare SQ8-tier hybrid")
-    val fullHybrid = Retrieval.hybridFromStores(spark, bmDoor, bmDir,
-      nBuckets, vecDoor, vecDir, cents, q, qTerms, k = 10, legK = 12,
+    val fullHybrid = Retrieval.hybridFromStores(spark, bmDoor -> bmDir,
+      vecDoor -> vecDir, Retrieval.Frame(q, qTerms), k = 10, legK = 12,
       nprobe = 3)
     assert(rows(adaptive(Long.MaxValue, 1000)) === rows(fullHybrid),
       "a covering margin + covering rerankC must serve the " +
@@ -630,8 +672,8 @@ class PqStoreSpec extends AnyFunSuite {
     IndexMaintenanceStream.applyBatch(spark, sq8Door, sq8Dir, cellWrite,
       vBatch, 0L)
     val q = emb.where(col("vec_id") === 2L)
-    val df = Retrieval.hybridFromStoresSq8(spark, bmDoor, bmDir,
-      nBuckets, sq8Door, sq8Dir, cents, q, qTerms,
+    val df = Retrieval.hybridFromStores(spark, bmDoor -> bmDir,
+      sq8Door -> sq8Dir, Retrieval.Frame(q, qTerms),
       k = 10, legK = 12, nprobe = 3)
     // the vector leg IS the hand-composed int8 probe over the store
     val (view, _) = IndexMaintenanceStream.viewAt(spark, sq8Door,
@@ -646,8 +688,8 @@ class PqStoreSpec extends AnyFunSuite {
     assert(rows(df) === rows(hand))
     val qVec = q.select("embedding").collect().head
       .getSeq[Float](0).map(_.toDouble)
-    val scalar = Retrieval.hybridFromStoresSq8Scalar(spark, bmDoor,
-      bmDir, nBuckets, sq8Door, sq8Dir, cents, 2L -> qVec, qTerms,
+    val scalar = Retrieval.hybridFromStores(spark, bmDoor -> bmDir,
+      sq8Door -> sq8Dir, Retrieval.Scalar(2L, qVec, qTerms),
       k = 10, legK = 12, nprobe = 3)
     assert(rows(scalar) === rows(df),
       "the scalar SQ8 door changed the single-query answer")

@@ -144,4 +144,31 @@ class TablesSpec extends AnyFunSuite {
     Tables.invalidateSchemaCache(Some(tmp))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
+
+  test("invalidateSchemaCache(Some(dir)) drops only entries under that " +
+      "directory, never a sibling whose name merely extends it") {
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-tabprefix").toString
+    val (foo, foobar) = (s"$root/foo", s"$root/foobar")
+    def write(dir: String, cols: Int): Unit =
+      spark.range(3).select((0 until cols).map(i =>
+        (col("id") + i).as(s"c$i")): _*)
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def fields(dir: String): Seq[String] =
+      Tables.table(spark, dir, "documents").schema.fieldNames.toSeq
+    write(foo, 1); write(foobar, 1)
+    assert(fields(foo) == Seq("c0") && fields(foobar) == Seq("c0"))
+    // regenerate both; only foo's entry is invalidated
+    write(foo, 2); write(foobar, 2)
+    Tables.invalidateSchemaCache(Some(foo))
+    assert(fields(foo) == Seq("c0", "c1"), "foo's own entry was kept")
+    assert(fields(foobar) == Seq("c0"),
+      "invalidating /foo dropped the cached entry of /foobar")
+    // a trailing slash names the same directory
+    Tables.invalidateSchemaCache(Some(foobar + "/"))
+    assert(fields(foobar) == Seq("c0", "c1"))
+    Tables.invalidateSchemaCache(Some(root))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
 }
